@@ -27,12 +27,15 @@ correctness.
 
 from __future__ import annotations
 
+import logging
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 __all__ = ["track", "untrack", "disown", "cache_scope", "release_caches"]
+
+log = logging.getLogger(__name__)
 
 _SCOPES: list[list[DataFrame]] = []
 _GLOBAL: list[DataFrame] = []
@@ -52,6 +55,8 @@ def _same_plan(a: DataFrame, b: DataFrame) -> bool:
             .sameResult(b._jdf.queryExecution().analyzed())
         )
     except Exception:
+        log.warning("plan comparison failed; treating plans as different",
+                    exc_info=True)
         return False
 
 
@@ -127,7 +132,7 @@ def cache_scope():
             try:
                 df.unpersist()
             except Exception:
-                pass
+                log.warning("unpersist of a scoped cache failed", exc_info=True)
 
 
 def release_caches() -> int:
@@ -143,5 +148,5 @@ def release_caches() -> int:
             df.unpersist()
             n += 1
         except Exception:
-            pass
+            log.warning("unpersist of a tracked cache failed", exc_info=True)
     return n

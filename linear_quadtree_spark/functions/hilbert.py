@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from linear_quadtree_spark.config import Bounds
 from linear_quadtree_spark.functions.geocell import axis_index_expr
 from linear_quadtree_spark.functions.textexpr import DUCK, Eng
+from linear_quadtree_spark.plans.cover import spans_predicate
 
 __all__ = [
     "HILBERT_LEVEL",
@@ -246,8 +247,7 @@ def hilbert_bbox(
     several times, so the collapsed tree grows combinatorially and the
     optimizer stalls for minutes. Cache or save first."""
     cover = hilbert_cover_rect(x0, x1, y0, y1, bounds, level)
-    pred = " OR ".join(f"({key_col} BETWEEN {lo} AND {hi})" for lo, hi in cover)
-    return df.filter(F.expr(pred)).filter(
+    return df.filter(spans_predicate(key_col, cover)).filter(
         (F.col(x_col).cast("double") >= x0)
         & (F.col(x_col).cast("double") <= x1)
         & (F.col(y_col).cast("double") >= y0)

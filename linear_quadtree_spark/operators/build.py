@@ -27,7 +27,10 @@ across partition boundaries.
 
 from __future__ import annotations
 
+import logging
+import math
 import time
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -37,9 +40,16 @@ from pyspark.storagelevel import StorageLevel
 from linear_quadtree_spark.cache import track
 from linear_quadtree_spark.config import Bounds, DEFAULT_BOUNDS
 from linear_quadtree_spark.functions.encode import encode_struct_udf, tile_id_col
-from linear_quadtree_spark.plans.cover import ZRange, cover_rect, ranges_to_predicate
+from linear_quadtree_spark.plans.cover import (
+    ZRange,
+    cover_rect,
+    ranges_to_predicate,
+    spans_predicate,
+)
 
 __all__ = ["encode_points", "LQTTable", "STORE_SPLIT_LEVEL"]
+
+log = logging.getLogger(__name__)
 
 #: Rows with zlvl < this go to the side relation at build time. Queries may
 #: then plan covers at any level ≤ this and stay exact: main-table rows are
@@ -113,7 +123,7 @@ class LQTTable:
                 try:
                     df.unpersist()
                 except Exception:
-                    pass
+                    log.warning("unpersist failed", exc_info=True)
 
     # ------------------------------------------------------------------ build
     @classmethod
@@ -161,39 +171,11 @@ class LQTTable:
             StorageLevel.MEMORY_AND_DISK,
         )
         n_rows = enc.count() if eager_count else None
-        main = enc.filter(F.col("zlvl") >= STORE_SPLIT_LEVEL)
+        main = cls.range_sort(
+            enc.filter(F.col("zlvl") >= STORE_SPLIT_LEVEL), enc,
+            x_col, tiebreaker, num_partitions, salt,
+        )
         side = enc.filter(F.col("zlvl") < STORE_SPLIT_LEVEL)
-
-        sort_cols = ["zs"] + ([tiebreaker] if tiebreaker else [])
-        if num_partitions is None:
-            # 2 partitions per core: one-task-per-slot waves convoy on
-            # Python-worker startup and leave no room for stragglers; at
-            # cluster scale partition count is sized by bytes instead
-            # (~input_bytes / 256 MB), which the caller passes explicitly.
-            num_partitions = max(2 * df.sparkSession.sparkContext.defaultParallelism, 2)
-        if num_partitions == 1:
-            # small-input fast path (the reference's single-block
-            # lqt_create_cuda_noblock, lqt.cu:159-164): one partition
-            # needs no range boundaries, so skip the RangePartitioner's
-            # sampling job entirely — coalesce + one local sort. Salt
-            # resolution stays BELOW this branch: one partition never
-            # salts, so running detect_salt's sampling job first would
-            # be a whole Spark job whose answer is ignored.
-            main = main.coalesce(1)
-        else:
-            if salt == "auto":
-                salt = cls.detect_salt(enc, num_partitions)
-            if salt > 1:
-                tb = tiebreaker or x_col
-                main = main.withColumn(
-                    "_salt", F.pmod(F.xxhash64(F.col(tb)), F.lit(salt))
-                )
-                main = main.repartitionByRange(
-                    num_partitions, "zs", "_salt"
-                ).drop("_salt")
-            else:
-                main = main.repartitionByRange(num_partitions, "zs")
-        main = main.sortWithinPartitions(*sort_cols)
 
         if persist:
             main = track(main)
@@ -210,6 +192,51 @@ class LQTTable:
             enc_cache=enc,
         )
         return tbl
+
+    @classmethod
+    def range_sort(
+        cls,
+        main: DataFrame,
+        salt_sample: DataFrame,
+        x_col: str = "x",
+        tiebreaker: str | None = None,
+        num_partitions: int | None = None,
+        salt: int | str = 0,
+    ) -> DataFrame:
+        """Range-partition keyed rows on zs (salted if asked) and sort
+        each partition by ``(zs, tiebreaker)``: the samplesort half of a
+        build, shared by :meth:`build` (fresh keys) and compaction
+        (stored keys). ``salt="auto"`` sizes the salt from a sample of
+        ``salt_sample``'s zs column (see :meth:`detect_salt`)."""
+        if num_partitions is None:
+            # 2 partitions per core: one-task-per-slot waves convoy on
+            # Python-worker startup and leave no room for stragglers; at
+            # cluster scale partition count is sized by bytes instead
+            # (~input_bytes / 256 MB), which the caller passes explicitly.
+            num_partitions = max(2 * main.sparkSession.sparkContext.defaultParallelism, 2)
+        if num_partitions == 1:
+            # small-input fast path (the reference's single-block
+            # lqt_create_cuda_noblock, lqt.cu:159-164): one partition
+            # needs no range boundaries, so skip the RangePartitioner's
+            # sampling job entirely — coalesce + one local sort. Salt
+            # resolution stays BELOW this branch: one partition never
+            # salts, so running detect_salt's sampling job first would
+            # be a whole Spark job whose answer is ignored.
+            main = main.coalesce(1)
+        else:
+            if salt == "auto":
+                salt = cls.detect_salt(salt_sample, num_partitions)
+            if salt > 1:
+                tb = tiebreaker or x_col
+                main = main.withColumn(
+                    "_salt", F.pmod(F.xxhash64(F.col(tb)), F.lit(salt))
+                )
+                main = main.repartitionByRange(
+                    num_partitions, "zs", "_salt"
+                ).drop("_salt")
+            else:
+                main = main.repartitionByRange(num_partitions, "zs")
+        return main.sortWithinPartitions("zs", *([tiebreaker] if tiebreaker else []))
 
     # --------------------------------------------------------------- salting
     @staticmethod
@@ -241,8 +268,6 @@ class LQTTable:
         f = row["hot"] / row["tot"]
         if f * num_partitions <= 1.0:
             return 0
-        import math
-
         return min(int(math.ceil(f * num_partitions * margin)), num_partitions)
 
     # ------------------------------------------------------------ persistence
@@ -260,16 +285,25 @@ class LQTTable:
     def load(
         cls,
         spark,
-        path: str,
+        path: str | Sequence[str],
         bounds: Bounds = DEFAULT_BOUNDS,
         x_col: str = "x",
         y_col: str = "y",
         tiebreaker: str | None = None,
         format: str = "parquet",
     ) -> "LQTTable":
+        """Load a saved table. ``path`` may list several saved tables
+        with one schema (a base and its delta runs): each relation is
+        then ONE multi-path scan over all of them. The schema is read
+        once, from the first path's ``main``, and given to both scans,
+        so loading costs one schema-inference job however many paths
+        there are."""
+        roots = [path] if isinstance(path, str) else list(path)
+        schema = spark.read.format(format).load(f"{roots[0]}/main").schema
+        reader = spark.read.format(format).schema(schema)
         return cls(
-            main=spark.read.format(format).load(f"{path}/main"),
-            side=spark.read.format(format).load(f"{path}/side"),
+            main=reader.load([f"{r}/main" for r in roots]),
+            side=reader.load([f"{r}/side" for r in roots]),
             bounds=bounds,
             x_col=x_col,
             y_col=y_col,
@@ -354,12 +388,10 @@ class LQTTable:
         row-group pruning / Iceberg file pruning at scale. On a
         partitioned table (load_partitioned) a quad IN (...) predicate
         is added so whole directories prune first."""
-        pred = ranges_to_predicate(ranges, F.col("zs"))
+        pred = ranges_to_predicate(ranges)
         if self.quad_level is not None and self.main_quad is not None:
             runs = self.quad_runs_for_ranges(ranges, self.quad_level)
-            qpred = F.lit(False)
-            for lo, hi in runs:
-                qpred = qpred | F.col("quad").between(lo, hi)
+            qpred = spans_predicate("quad", runs)
             pruned = self.main_quad.filter(qpred & pred).drop("quad")
         else:
             pruned = self.main.filter(pred)

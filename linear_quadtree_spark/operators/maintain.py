@@ -11,15 +11,20 @@ day; re-sorting 100 TB per delta is not a plan):
 * each ingested batch becomes its own **run**: a fully built LQT
   relation (encode → range shuffle → per-partition sort) sized to the
   batch, not to the base table — O(delta), never O(base);
-* queries read **base ∪ runs**. Every run is individually
-  range-partitioned and sorted, so the same zs interval-cover predicate
-  prunes every run's files; the reference's eager k-way merge becomes a
-  merge *at read time* that costs nothing because candidate unions are
-  per-run pruned scans (operators/build.py `candidates`);
+* queries read **base ∪ runs** as ONE multi-path scan per relation
+  (``load_with_runs``: the schema is inferred once, from the base).
+  Every run is individually range-partitioned and sorted, so the same
+  zs interval-cover predicate prunes every run's files; the reference's
+  eager k-way merge becomes a merge *at read time* that costs nothing
+  because the candidate scan is pruned per file (operators/build.py
+  `candidates`);
 * **compaction** folds the runs back into a single base when the run
   count (i.e. per-query file fan-out) grows — the reference's merge,
   run lazily and amortized, exactly Iceberg's rewrite-data-files
-  maintenance action.
+  maintenance action. Like ``lqt_merge`` it works on blocks whose keys
+  are already computed: the stored ``main`` rows are re-sorted on the
+  ``zkey/zs/zlvl`` they carry and ``side`` is copied as is — nothing is
+  re-encoded.
 
 At cluster scale base and runs are Iceberg snapshots (appends are new
 manifests; compaction is a rewrite + atomic snapshot commit). The
@@ -142,14 +147,12 @@ def load_with_runs(
     tiebreaker: str | None = None,
     format: str = "parquet",
 ) -> LQTTable:
-    """Load base + every run as one merged query view (see merge_runs)."""
-    base = LQTTable.load(spark, path, bounds, x_col, y_col, tiebreaker, format)
-    runs = [
-        LQTTable.load(spark, str(_runs_dir(path) / f"gen={g}"),
-                      bounds, x_col, y_col, tiebreaker, format)
-        for g in list_runs(path)
-    ]
-    return merge_runs(base, *runs)
+    """Load base + every run as one merged query view: each relation is
+    one multi-path scan over the base and every run, with the base's
+    schema (see LQTTable.load). Runs must carry the base's columns and
+    types; the query semantics are those of merge_runs."""
+    roots = [path] + [str(_runs_dir(path) / f"gen={g}") for g in list_runs(path)]
+    return LQTTable.load(spark, roots, bounds, x_col, y_col, tiebreaker, format)
 
 
 def compact(
@@ -164,11 +167,19 @@ def compact(
     format: str = "parquet",
 ) -> int:
     """Fold base + all runs into a fresh single-sorted base (the
-    reference's k-way merge, amortized). Re-*sorts* rather than
-    merge-reads: a global range shuffle re-balances partition bounds to
-    the post-delta distribution, which pure run-merging cannot do —
-    skew that arrived in deltas is re-leveled here. Returns the number
-    of runs folded.
+    reference's k-way merge, amortized). Returns the number of runs
+    folded.
+
+    Like ``lqt_merge`` (lqt.cu:36-91) this is a re-sort of blocks that
+    are already keyed: the stored ``main`` rows of base and runs are
+    range-partitioned and sorted by ``(zs, tiebreaker)`` on the keys
+    they carry (the build's own ``LQTTable.range_sort``), and ``side``
+    is rewritten as is. No row is re-encoded, so the stored keys are
+    trusted: ``bounds`` must be the bounds the store was built with.
+    Re-sorting rather than merge-reading lets the global range shuffle
+    re-balance partition bounds to the post-delta distribution, which
+    pure run-merging cannot do — skew that arrived in deltas is
+    re-leveled here (``salt="auto"`` samples the stored keys).
 
     Swap is staging-dir + rename on the local FS; on a cluster this is
     Iceberg's rewrite-files + atomic snapshot commit — the engine's
@@ -177,16 +188,11 @@ def compact(
     if not gens:
         return 0
     merged = load_with_runs(spark, path, bounds, x_col, y_col, tiebreaker, format)
-    full = merged.main.unionByName(merged.side)
-    payload = [c for c in full.columns if c not in ("zkey", "zs", "zlvl")]
-    rebuilt = LQTTable.build(
-        full.select(*payload), bounds, x_col, y_col, tiebreaker,
-        num_partitions=num_partitions, salt=salt,
-        persist=False, eager_count=False,
+    merged.main = LQTTable.range_sort(
+        merged.main, merged.main, x_col, tiebreaker, num_partitions, salt,
     )
     staging = f"{path}/_compact_staging"
-    rebuilt.save(staging, format=format)
-    rebuilt.unpersist()
+    merged.save(staging, format=format)
     root = Path(path)
     for rel in ("main", "side"):
         shutil.rmtree(root / rel)

@@ -27,9 +27,13 @@ import numpy as np
 from linear_quadtree_spark.config import DEPTH, MAX_SAFE_LEVEL, SIGN_BIT, Bounds
 from linear_quadtree_spark.intervals import merge_spans
 
-__all__ = ["ZRange", "cover_rect", "cover_cells", "ranges_to_predicate", "merge_ranges"]
+__all__ = [
+    "ZRange", "cover_rect", "cover_cells", "spans_predicate", "ranges_to_predicate",
+    "merge_ranges",
+]
 
 _I64 = (1 << 64) - 1
+_INT64_MIN = -(1 << 63)
 
 
 def _flip(u: int) -> int:
@@ -212,16 +216,28 @@ def cover_cells(
             return 1, [0, 1, 2, 3]
 
 
-def ranges_to_predicate(ranges: list[ZRange], zs_col):
-    """Compile ranges into a single Catalyst predicate on the zs column.
+def spans_predicate(col: str, spans):
+    """Compile closed integer spans into ONE Catalyst predicate on ``col``.
 
-    Emits an OR-chain of BETWEENs — plain comparisons on the scan column,
-    so parquet min/max row-group stats prune on the sorted layout."""
+    The OR-of-BETWEEN is built as a single SQL string and parsed once
+    (``F.expr``): plain comparisons on the scan column, so parquet
+    min/max row-group stats prune on a sorted layout, at one py4j call
+    for the whole chain instead of three per span. A span starting at
+    -2^63 is written ``col <= hi``: the lower bound is implied by the
+    BIGINT type, and a grammar that reads the sign as an operator
+    parses ``-9223372036854775808`` as the negation of a DECIMAL, which
+    would cast the column and stop the pushdown. Used by every curve:
+    zs covers, quadrant-directory runs, Hilbert and S2 sort-key spans."""
     from pyspark.sql import functions as F
 
-    if not ranges:
-        return F.lit(False)
-    pred = zs_col.between(ranges[0].lo, ranges[0].hi)
-    for r in ranges[1:]:
-        pred = pred | zs_col.between(r.lo, r.hi)
-    return pred
+    terms = [
+        f"({col} <= {hi})" if lo == _INT64_MIN else f"({col} BETWEEN {lo} AND {hi})"
+        for lo, hi in spans
+    ]
+    return F.expr(" OR ".join(terms)) if terms else F.lit(False)
+
+
+def ranges_to_predicate(ranges: list[ZRange], zs_col: str = "zs"):
+    """Compile a zs cover into a single predicate on the ``zs_col``
+    column (see :func:`spans_predicate`)."""
+    return spans_predicate(zs_col, ((r.lo, r.hi) for r in ranges))

@@ -140,3 +140,125 @@ def test_stream_ingest_builds_runs_per_microbatch(spark, sf_dir, tmp_path):
     assert merged.main.count() + merged.side.count() == pts.count()
     mono = LQTTable.build(pts, DEFAULT_BOUNDS, tiebreaker="doc_id", persist=False)
     assert _ids(bbox_query(merged, *BBOX)) == _ids(bbox_query(mono, *BBOX))
+
+
+def _store_with_runs(pts, path):
+    """A saved base (doc_id % 3 == 0) plus two delta runs (== 1, == 2)."""
+    LQTTable.build(pts.filter(F.col("doc_id") % 3 == 0), DEFAULT_BOUNDS,
+                   tiebreaker="doc_id", persist=False).save(path)
+    for r in (1, 2):
+        append_run(pts.filter(F.col("doc_id") % 3 == r), path,
+                   tiebreaker="doc_id", num_partitions=2)
+
+
+def _sql_execution_ids(spark) -> set[int]:
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = set()
+    while it.hasNext():
+        out.add(int(it.next().executionId()))
+    return out
+
+
+def test_load_with_runs_is_one_scan_per_relation(spark, sf_dir, tmp_path):
+    """Base + 2 runs load as ONE multi-path parquet scan per relation,
+    paying at most one schema-inference job (from the base main)."""
+    pts = _pts(spark, sf_dir)
+    path = str(tmp_path / "lqt")
+    _store_with_runs(pts, path)
+
+    sc = spark.sparkContext
+    group = "load_with_runs-probe"
+    sc.setJobGroup(group, "count the jobs load_with_runs starts")
+    try:
+        merged = load_with_runs(spark, path, tiebreaker="doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+
+    full = merged.main.unionByName(merged.side)
+    plan = full._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 2, plan
+    assert plan.count("InMemoryFileIndex(3 paths)") == 2, plan
+    assert full.count() == pts.count()
+    mono = LQTTable.build(pts, DEFAULT_BOUNDS, tiebreaker="doc_id", persist=False)
+    assert _ids(bbox_query(merged, *BBOX)) == _ids(bbox_query(mono, *BBOX))
+
+
+def test_compact_resorts_stored_keys_without_reencoding(spark, sf_dir, tmp_path):
+    """Compaction runs no Python UDF; every stored key still equals the
+    reference encode of its row's (x, y)."""
+    import numpy as np
+
+    from linear_quadtree_spark.functions.encode import zorder_encode_np, zs_from_zkey
+
+    pts = _pts(spark, sf_dir)
+    path = str(tmp_path / "lqt")
+    _store_with_runs(pts, path)
+
+    before = _sql_execution_ids(spark)
+    assert compact(spark, path, tiebreaker="doc_id", num_partitions=4) == 2
+    store = spark._jsparkSession.sharedState().statusStore()
+    plans = [
+        store.execution(eid).get().physicalPlanDescription()
+        for eid in sorted(_sql_execution_ids(spark) - before)
+    ]
+    assert plans and not any("ArrowEvalPython" in p for p in plans)
+
+    rows = (
+        spark.read.parquet(f"{path}/main")
+        .unionByName(spark.read.parquet(f"{path}/side"))
+        .select("x", "y", "zkey", "zs", "zlvl")
+        .toPandas()
+    )
+    assert len(rows) == pts.count()
+    zkey, zlvl = zorder_encode_np(rows.x.to_numpy(), rows.y.to_numpy(), DEFAULT_BOUNDS)
+    assert (rows.zkey.to_numpy() == zkey.view(np.int64)).all()
+    assert (rows.zs.to_numpy() == zs_from_zkey(zkey)).all()
+    assert (rows.zlvl.to_numpy() == zlvl).all()
+
+
+def _files_sorted(spark, rel_path) -> bool:
+    """Every file's rows are non-decreasing in (zs, doc_id), in file order."""
+    last: dict[str, tuple] = {}
+    rows = spark.read.parquet(rel_path).select(
+        F.input_file_name().alias("f"), "zs", "doc_id"
+    ).collect()
+    for f, zs, k in rows:
+        if f in last and (zs, k) < last[f]:
+            return False
+        last[f] = (zs, k)
+    return True
+
+
+def test_compact_salt_auto_and_single_partition(spark, sf_dir, tmp_path):
+    """The stored-key compaction covers both range_sort branches: a hot
+    cell under salt="auto" (the salted range shuffle) and
+    num_partitions=1 (one coalesced, locally sorted file)."""
+    hot = spark.range(600).select(
+        (F.col("id") + 10_000_000).alias("doc_id"),
+        F.lit(1012.3456).cast("float").alias("x"),
+        F.lit(1037.789).cast("float").alias("y"),
+    )
+    base = _pts(spark, sf_dir)
+    pts = base.unionByName(hot.select(*[F.col(c).cast(base.schema[c].dataType)
+                                        for c in base.columns]))
+    mono = LQTTable.build(pts, DEFAULT_BOUNDS, tiebreaker="doc_id", persist=False)
+    rect = (1010.0, 1015.0, 1035.0, 1040.0)
+    expected = _ids(bbox_query(mono, *rect))
+    assert len(expected) >= 600
+
+    for name, kw in (("auto", {"salt": "auto"}), ("one", {"num_partitions": 1})):
+        path = str(tmp_path / name)
+        _store_with_runs(pts, path)
+        if name == "auto":
+            stored = load_with_runs(spark, path, tiebreaker="doc_id").main
+            parts = 2 * spark.sparkContext.defaultParallelism
+            assert LQTTable.detect_salt(stored, parts) > 1
+        assert compact(spark, path, tiebreaker="doc_id", **kw) == 2
+        assert list_runs(path) == []
+        after = LQTTable.load(spark, path, DEFAULT_BOUNDS, tiebreaker="doc_id")
+        assert after.main.count() + after.side.count() == pts.count()
+        assert _files_sorted(spark, f"{path}/main")
+        if name == "one":
+            assert after.main.rdd.getNumPartitions() == 1
+        assert _ids(bbox_query(after, *rect)) == expected

@@ -9,6 +9,8 @@ stable across Spark 3.5/4.x plan renderings.
 """
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from linear_quadtree_spark import DEFAULT_BOUNDS
@@ -132,6 +134,89 @@ def test_saved_table_bbox_scan_prunes_row_groups(spark, tmp_path):
         .count()
     )
     assert out.count() == exp
+
+
+def test_corner_cover_lower_bound_stays_bigint(spark, tmp_path):
+    """A cover touching the domain's lower-left corner starts at
+    zs = -2^63, a value a bare SQL literal cannot always spell as a
+    BIGINT. On a saved table, the whole-domain and corner rects must
+    answer exactly like the coordinate filter, and the zs predicate
+    must still reach the parquet scan as a pushed filter with no
+    DECIMAL cast in the plan."""
+    from linear_quadtree_spark.operators.spatial import bbox_query
+
+    pts = spark.range(20_000).select(
+        F.col("id").alias("pid"),
+        geotag_x("pid").alias("x"),
+        geotag_y("pid").alias("y"),
+    )
+    corner = spark.createDataFrame(
+        [(20_000 + i, 1000.0 + 0.01 * i, 1000.0 + 0.02 * i) for i in range(40)],
+        pts.schema,
+    )
+    t = LQTTable.build(pts.unionByName(corner), DEFAULT_BOUNDS, tiebreaker="pid",
+                       persist=False)
+    path = str(tmp_path / "lqt_corner")
+    t.save(path)
+    t.unpersist()
+    loaded = LQTTable.load(spark, path, DEFAULT_BOUNDS, tiebreaker="pid")
+    raw = spark.read.parquet(f"{path}/main").unionByName(spark.read.parquet(f"{path}/side"))
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        for rect in ((1000.0, 1100.0, 1000.0, 1100.0), (1000.0, 1000.3, 1000.0, 1000.4)):
+            assert loaded.cover(*rect)[0].lo == -(1 << 63)
+            out = bbox_query(loaded, *rect)
+            plan = _plan(out)
+            pushed = plan.split("PushedFilters: [", 1)[1].split("], ", 1)[0]
+            assert "zs" in pushed, pushed
+            assert "decimal" not in plan.lower()
+            exp = raw.filter(
+                (F.col("x") >= rect[0]) & (F.col("x") <= rect[1])
+                & (F.col("y") >= rect[2]) & (F.col("y") <= rect[3])
+            )
+            got = sorted(r.pid for r in out.select("pid").collect())
+            assert got == sorted(r.pid for r in exp.select("pid").collect())
+            assert len(got) >= 20
+    finally:
+        spark.conf.set(key, old)
+
+
+_I64_EDGES = [-(1 << 63), -(1 << 63) + 1, -1, 0, 1, (1 << 63) - 2, (1 << 63) - 1]
+
+
+@pytest.fixture(scope="module")
+def zs_values(spark):
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    vals = _I64_EDGES + [int(v) for v in rng.integers(-(1 << 63), (1 << 63) - 1, 200)]
+    df = spark.createDataFrame([(v,) for v in vals], "zs: long").cache()
+    yield df
+    df.unpersist()
+
+
+@settings(max_examples=30, deadline=None)
+@given(spans=st.lists(
+    st.tuples(
+        st.one_of(st.sampled_from(_I64_EDGES), st.integers(-(1 << 63), (1 << 63) - 1)),
+        st.one_of(st.sampled_from(_I64_EDGES), st.integers(-(1 << 63), (1 << 63) - 1)),
+    ).map(sorted),
+    max_size=6,
+))
+def test_string_span_predicate_matches_column_chain(zs_values, spans):
+    """The single-string OR-of-BETWEEN selects exactly the rows the
+    per-span Column chain it replaced selects, -2^63 bounds included."""
+    from linear_quadtree_spark.plans.cover import spans_predicate
+
+    chain = F.lit(False)
+    for lo, hi in spans:
+        chain = chain | F.col("zs").between(lo, hi)
+    rows = zs_values.select(
+        spans_predicate("zs", spans).alias("new"), chain.alias("old")
+    ).collect()
+    assert all(r.new == r.old for r in rows)
 
 
 def test_text_ops_no_shuffle_no_python(spark, sf_dir):
