@@ -2483,10 +2483,7 @@ def _q_hexcell_stats(spark, sf_dir):
     )
 
 
-# ------------------------------------------------- S2-style spherical index
-S2_FINE_LEVEL = 6
-S2_ROLL_LEVEL = 2
-S2_COVER_LEVEL = 4
+# ------------------------- spherical index: real S2CellId (s2real)
 #: smaller than HAV_RADIUS_KM so this query's answer differs from
 #: haversine_sites (different cover geometry, different rows)
 S2_CAP_KM = 1200.0
@@ -2503,108 +2500,10 @@ def _s2_pts(spark, sf_dir):
     )
 
 
-def _q_s2cell_stats(spark, sf_dir):
-    """S2-style spherical alternate index (round-3): WGS84 pages keyed
-    by cube-face + quadratic-ST + Hilbert cells (functions/s2cell.py —
-    the genuinely spherical half of the north rule's "H3/S2" ask; the
-    hexagonal half is hexcell_stats). Fine cells are a map-only chain
-    of O(level) expressions; the coarse rollup key is PURE INTEGER
-    TRUNCATION of the fine id (s2_parent_expr) — multi-resolution
-    spherical rollups without re-encoding, because Hilbert descendants
-    occupy one contiguous id range."""
-    from linear_quadtree_spark.functions.s2cell import (
-        s2_parent_expr,
-        with_s2cell,
-    )
-    from linear_quadtree_spark.functions.textexpr import SPARK as _S
-
-    fine = with_s2cell(_s2_pts(spark, sf_dir), "lon", "lat", S2_FINE_LEVEL)
-    parent = s2_parent_expr(_S, "s2cell", S2_FINE_LEVEL, S2_ROLL_LEVEL)
-    return fine.groupBy(F.expr(parent).alias("s2parent")).agg(
-        F.count(F.lit(1)).alias("n_pages"),
-        F.countDistinct("s2cell").alias("n_cells"),
-        F.sum("doc_id").alias("sum_id"),
-    )
-
-
-def _s2cell_stats_oracle() -> str:
-    from linear_quadtree_spark.functions.mercator import lonlat_from_id_exprs
-    from linear_quadtree_spark.functions.s2cell import (
-        s2_ctes_duck,
-        s2_parent_expr,
-    )
-    from linear_quadtree_spark.functions.textexpr import DUCK as _D
-
-    lon, lat = lonlat_from_id_exprs(_D, "doc_id")
-    parent = s2_parent_expr(_D, "s2cell", S2_FINE_LEVEL, S2_ROLL_LEVEL)
-    return f"""
-WITH p AS (SELECT doc_id, {lon} AS lon, {lat} AS lat FROM documents),
-{s2_ctes_duck('p', 'lon', 'lat', S2_FINE_LEVEL)}
-SELECT {parent} AS s2parent, COUNT(*) AS n_pages,
-       COUNT(DISTINCT s2cell) AS n_cells,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_id
-FROM s2fin GROUP BY 1
-"""
-
-
-def _q_s2_cap_query(spark, sf_dir):
-    """Spherical range query via S2 range scans (round-3): pages within
-    S2_CAP_KM great-circle km of each site. The cap cover is a
-    driver-computed query CONSTANT (conservative cell ranges at
-    S2_COVER_LEVEL, Hilbert-merged to a short list) that prunes before
-    the broadcast site join; the exact haversine refine keeps the
-    answer identical to the cover-free oracle — the spherical twin of
-    the planar bbox cover→refine discipline.
-
-    The prefilter is a broadcast LEFT-SEMI range join against the tiny
-    ranges dimension, NOT an OR-of-BETWEEN filter expression: a filter
-    on `s2cell` would be pushed through the unrolled encode chain by
-    predicate-pushdown, substituting the whole O(level) expression tree
-    once per predicate term (measured: plan-size blowup that stalls the
-    optimizer). The semi-join evaluates the same ranges against the
-    computed column at RUN time — one chain, R comparisons per row. On
-    a cell-sorted stored table the same ranges become footer/partition
-    pruning instead (tests/test_plans.py's saved-layout pattern)."""
-    from linear_quadtree_spark.functions.mercator import haversine_km_expr
-    from linear_quadtree_spark.functions.s2cell import (
-        merge_ranges,
-        s2_cap_cover,
-        with_s2cell,
-    )
-    from linear_quadtree_spark.functions.textexpr import SPARK as _S
-
-    spans: list[tuple[int, int]] = []
-    for _, slon, slat in HAV_SITES:
-        spans.extend(s2_cap_cover(slon, slat, S2_CAP_KM, S2_COVER_LEVEL))
-    merged = merge_ranges(spans)
-
-    cells = with_s2cell(_s2_pts(spark, sf_dir), "lon", "lat", S2_COVER_LEVEL)
-    ranges = spark.createDataFrame(
-        [(int(lo), int(hi)) for lo, hi in merged], "lo long, hi long"
-    )
-    cand = cells.join(
-        F.broadcast(ranges),
-        (F.col("s2cell") >= F.col("lo")) & (F.col("s2cell") <= F.col("hi")),
-        "leftsemi",
-    )
-    sites = spark.createDataFrame(
-        HAV_SITES, "site string, slon double, slat double"
-    )
-    d = haversine_km_expr(_S, "lon", "lat", "slon", "slat")
-    return (
-        cand.crossJoin(F.broadcast(sites))
-        .filter(F.expr(d) <= F.lit(S2_CAP_KM))
-        .groupBy("site")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum("doc_id").alias("sum_id"),
-        )
-    )
-
-
 def _s2_cap_oracle() -> str:
-    """Cover-free pure-haversine twin — an independent plan family; it
-    matches the Spark cover→refine plan iff the cover is conservative."""
+    """Cover-free pure-haversine twin of s2real_cap_query — an
+    independent plan family; it matches the Spark cover→refine plan
+    iff the cover is conservative."""
     from linear_quadtree_spark.functions.mercator import (
         haversine_km_expr,
         lonlat_from_id_exprs,
@@ -2625,7 +2524,6 @@ GROUP BY 1
 """
 
 
-# -------------------------------------- REAL S2CellId (round-5, s2real)
 S2REAL_ROLL = 4  #: oracle-checked grouping level (wide boundary margin)
 S2REAL_SUB = 8  #: countDistinct sub-level
 S2REAL_QUERY_SITE = (2.352, 48.857)  #: range-query anchor (lon, lat)
@@ -2637,9 +2535,8 @@ def _q_s2real_stats(spark, sf_dir):
     """REAL S2CellId alternate index (round 5 — closes VERDICT r4
     "What's missing" #3): library-interchangeable id packing
     (functions/s2real.py — per-face Hilbert orientation seeding,
-    trailing-lsb marker, `ToToken` hex tokens), unlike the S2-STYLE
-    simplified packing of s2cell_stats. Leaf ids are a map-only JVM
-    chain (8 element_at on ONE ArrayType literal — zero Python, zero
+    trailing-lsb marker, `ToToken` hex tokens). Leaf ids are a map-only
+    JVM chain (8 element_at on ONE ArrayType literal — zero Python, zero
     shuffle); rollup keys are the library's `(id & -lsb) | lsb` parent
     bit-algebra, sign-transparent on BIGINT. Oracle-checked outputs
     group at level 4 so cross-engine identity never rides a leaf-level
@@ -2695,7 +2592,7 @@ FROM cells GROUP BY 1
 def _s2real_query_consts() -> tuple[int, int, int]:
     """(query cell id, signed sortkey lo, signed sortkey hi) — driver-
     computed query CONSTANTS from the python helpers (same planning
-    discipline as s2_cap_cover)."""
+    discipline as s2real_region_cover)."""
     from linear_quadtree_spark.functions.s2real import (
         s2real_leaf_py,
         s2real_parent_py,
@@ -2726,8 +2623,8 @@ def _q_s2real_range(spark, sf_dir):
     level 5 + per-cell tokens exercise parent algebra and ToToken.
 
     The prefilter is a broadcast LEFT-SEMI join against a 1-row range
-    dimension, NOT a filter expression — the s2_cap_query discipline:
-    predicate pushdown would substitute the whole unrolled encode
+    dimension, NOT a filter expression (s2real_cap_query does the
+    same): predicate pushdown would substitute the whole unrolled encode
     chain into the predicate (per chunk column, so exponentially —
     measured: optimizer OOM); the semi join evaluates the range
     against the COMPUTED column at run time."""
@@ -2799,9 +2696,7 @@ def _q_s2real_cap(spark, sf_dir):
     contained cells whole, mixed-level spans, per-cell exact
     circumradius, conservative superset) — merged into signed-sortkey
     spans, broadcast-LEFT-SEMI range join (the chain-substitution
-    discipline), exact haversine refine. The real-id twin of
-    s2_cap_query: identical answers, library-interchangeable cell
-    ids doing the pruning."""
+    discipline), exact haversine refine."""
     from linear_quadtree_spark.functions.mercator import haversine_km_expr
     from linear_quadtree_spark.functions.s2real import (
         s2real_region_cover,
@@ -3200,8 +3095,6 @@ _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "anchor_terms": _q_anchor_terms,
         # alternate spatial indexes (never driver-sampled before round 5)
         "hexcell_stats": _q_hexcell_stats,
-        "s2cell_stats": _q_s2cell_stats,
-        "s2_cap_query": _q_s2_cap_query,
         "geohash_stats": _q_geohash_stats,
         # remaining queries without a prior driver row
         "image_pixel_stats": _q_image_pixel_stats,
@@ -3314,16 +3207,14 @@ _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 #: Family tag per registry entry — the certification/bench harnesses
 #: (`jobs/check_oracles.py --family=...`, `bench.py --family=...`)
 #: filter on these so a changed family can be re-certified without
-#: paying the full 153-query sweep. Tags are taxonomy; `_RAW_QUERIES`
+#: paying the full 156-query sweep. Tags are taxonomy; `_RAW_QUERIES`
 #: order is driver-window evidence rotation (see comment there).
 QUERY_FAMILIES: dict[str, str] = {
-    # altindex (11)
+    # altindex (10)
     "s2real_stats": "altindex",
     "s2real_range": "altindex",
     "s2real_cap_query": "altindex",
     "hexcell_stats": "altindex",
-    "s2cell_stats": "altindex",
-    "s2_cap_query": "altindex",
     "geohash_stats": "altindex",
     "hilbert_stats": "altindex",
     "hilbert_bbox": "altindex",
@@ -3342,7 +3233,7 @@ QUERY_FAMILIES: dict[str, str] = {
     "ann_topk_lsh": "ann",
     "ann_topk_ivf": "ann",
     "emb_neardup_pairs": "ann",
-    # clean (3)
+    # clean (4)
     "pii_scrub": "clean",
     "boilerplate_ngrams": "clean",
     "line_dedup": "clean",
@@ -3397,7 +3288,7 @@ QUERY_FAMILIES: dict[str, str] = {
     "snapshot_diff": "graph",
     "ranked_curation": "graph",
     "anchor_terms": "graph",
-    # media (2)
+    # media (3)
     "media_metadata": "media",
     "media_frames": "media",
     "image_pixel_stats": "media",
@@ -4295,8 +4186,6 @@ FROM pts GROUP BY 1
             + hex_stats_sql_duck("pts", "px", "py", "doc_id", DEFAULT_BOUNDS, HEX_RES)
         ),
         "hilbert_stats": _hilbert_stats_oracle(),
-        "s2cell_stats": _s2cell_stats_oracle(),
-        "s2_cap_query": _s2_cap_oracle(),
         "s2real_stats": _s2real_stats_oracle(),
         "s2real_range": _s2real_range_oracle(),
         "s2real_cap_query": _s2_cap_oracle(),

@@ -1,21 +1,19 @@
-"""REAL S2CellId construction — library-interchangeable id packing.
+"""REAL S2CellId construction — the engine's one spherical index.
 
-`functions/s2cell.py` ships the S2-STYLE index (same cube-face +
-quadratic-ST + Hilbert shape, simplified packing) and documents that
-its raw ids are NOT interchange-compatible with the `s2geometry`
-library. This module closes that gap (round-4 VERDICT "What's missing"
-#3) with the library's EXACT id construction, transcribed from the
-public S2 geometry specification and the open-source `s2geometry`
-sources (s2coords.h `GetFace`/`ValidFaceXYZtoUV`/`STtoUV`;
-s2cell_id.cc `FromFaceIJ`, `kPosToIJ`, `kPosToOrientation`, the
-4-bit `lookup_pos`/`lookup_ij` table build, and the
-`id = face<<61 | pos<<1 | 1` trailing-lsb packing):
+Ids are packed exactly as the `s2geometry` library packs them, so a
+cell id or token written here means the same cell to any S2 user.
+Spherical caps are covered by `s2real_region_cover`. The construction
+is transcribed from the public S2 geometry specification and the
+open-source `s2geometry` sources (s2coords.h `GetFace`/
+`ValidFaceXYZtoUV`/`STtoUV`; s2cell_id.cc `FromFaceIJ`, `kPosToIJ`,
+`kPosToOrientation`, the 4-bit `lookup_pos`/`lookup_ij` table build,
+and the `id = face<<61 | pos<<1 | 1` trailing-lsb packing):
 
 1. (lon, lat) -> unit XYZ; face = largest-|component| axis with the
    library's STRICT `>` tie order (ties fall to the later axis),
    `+3` when that component is negative.
-2. Per-face (u, v) via the exact `ValidFaceXYZtoUV` sign table —
-   note face 4's `v = -x/y`, which the style module simplifies away.
+2. Per-face (u, v) via the exact `ValidFaceXYZtoUV` sign table,
+   including face 4's `v = -x/y`.
 3. Quadratic ST: `s = u >= 0 ? sqrt(1+3u)/2 : 1 - sqrt(1-3u)/2`.
 4. `i = clamp(floor(2^30 * s), 0, 2^30-1)` (`STtoIJ` semantics — no
    dyadic +0.5 snap here; spec exactness wins, and the margin audit in
@@ -44,19 +42,19 @@ invariants only the genuine construction satisfies, tested: the
 lookup tables are mutual inverses, consecutive leaf positions are
 lattice neighbors WITHIN a face (the Hilbert continuity property),
 the curve stays continuous ACROSS face boundaries (the kSwapMask
-seeding property — the style module fails this by design), face-cell
-ids equal `face<<61 | 1<<60`, and parent ranges nest. A wrong row in
-`kPosToIJ`/`kPosToOrientation` or a wrong seed breaks (b).
+seeding property), face-cell ids equal `face<<61 | 1<<60`, and parent
+ranges nest. A wrong row in `kPosToIJ`/`kPosToOrientation` or a wrong
+seed breaks (b).
 
 Signedness: ids with face >= 4 set bit 63 and are negative as BIGINT.
 All algebra here is bit-ops (sign-safe); ORDER comparisons (range
 scans, BETWEEN pruning) go through `s2real_sortkey_expr` = id XOR
 1<<63, the engine-wide unsigned-order discipline (SURVEY §1.2).
 
-Scale: the forward key is map-only — scalar stages are the same
-engine-templated text as the style module, and the Hilbert chain is
-8 `element_at`s on ONE ArrayType literal (a single Catalyst Literal
-node, evaluated inside whole-stage codegen; the DuckDB twin replays
+Scale: the forward key is map-only — scalar stages are
+engine-templated SQL text (functions/textexpr.py), and the Hilbert
+chain is 8 `element_at`s on ONE ArrayType literal (a single Catalyst
+Literal node, evaluated inside whole-stage codegen; the DuckDB twin replays
 the same 1024-int table as a list literal in one CTE). Zero Python in
 the row path, zero shuffle, zero joins.
 """
@@ -89,7 +87,6 @@ __all__ = [
     "s2real_to_face_ij_py",
     "s2real_center_py",
     "from_face_ij_np",
-    "s2real_cap_cover",
     "s2real_region_cover",
     "s2real_edge_neighbors_py",
 ]
@@ -162,16 +159,19 @@ def _face_uv_np(x, y, z):
     comp = np.choose(axis, [x, y, z])
     face = np.where(comp < 0, axis + 3, axis)
     # ValidFaceXYZtoUV (all six rows, including face 4's v = -x/y).
-    u = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [y / x, -x / y, -x / z, z / x, z / y],
-        default=-y / z,
-    )
-    v = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [z / x, z / y, -y / z, y / x, -x / y],
-        default=-x / z,
-    )
+    # np.select evaluates every row, so the rows of the faces a point is
+    # not on divide by its zero components; the chosen row never does.
+    with np.errstate(divide="ignore", invalid="ignore"):
+        u = np.select(
+            [face == 0, face == 1, face == 2, face == 3, face == 4],
+            [y / x, -x / y, -x / z, z / x, z / y],
+            default=-y / z,
+        )
+        v = np.select(
+            [face == 0, face == 1, face == 2, face == 3, face == 4],
+            [z / x, z / y, -y / z, y / x, -x / y],
+            default=-x / z,
+        )
     return face.astype(np.int64), u, v
 
 
@@ -560,102 +560,6 @@ def s2real_ctes_duck(
 
 
 # ---------------------------------------------------------- cap covering
-def _uv_from_st_np(s):
-    return np.where(
-        s >= 0.5,
-        (1.0 / 3.0) * (4.0 * s * s - 1.0),
-        (1.0 / 3.0) * (1.0 - 4.0 * (1.0 - s) * (1.0 - s)),
-    )
-
-
-def _face_uv_to_xyz_np(face, u, v):
-    """Unit XYZ from per-face (u, v) — the inverse of the
-    ValidFaceXYZtoUV table, vectorized."""
-    one = np.ones_like(u)
-    x = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [one, -u, -u, -one, v],
-        default=v,
-    )
-    y = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [u, one, -v, -v, -one],
-        default=u,
-    )
-    z = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [v, v, one, -u, -u],
-        default=-one,
-    )
-    norm = np.sqrt(x * x + y * y + z * z)
-    return x / norm, y / norm, z / norm
-
-
-def s2real_cap_cover(
-    lon: float, lat: float, radius_km: float, level: int = 4
-) -> list[tuple[int, int]]:
-    """Conservative spherical-cap cover with REAL S2 ids — the
-    S2RegionCoverer essence at a fixed level: keep every level-
-    ``level`` cell whose center is within ``radius + its own exact
-    circumradius`` of the site (circumradius computed per cell from
-    its 4 true corners, not a remembered library constant — exactness
-    over memory), then merge the cells' descendant leaf ranges into a
-    short signed-SORTKEY span list for BETWEEN pruning.
-
-    Driver-side query-constant planning, O(6 * 4^level) numpy —
-    the same discipline as s2cell.s2_cap_cover and the planar cover
-    planner; the spans are a conservative SUPERSET, so an exact
-    haversine refine downstream keeps answers identical to a
-    cover-free oracle."""
-    from linear_quadtree_spark.functions.mercator import EARTH_RADIUS_KM
-    from linear_quadtree_spark.intervals import merge_spans
-
-    ang = radius_km / EARTH_RADIUS_KM
-    n = 1 << level
-    face = np.repeat(np.arange(6, dtype=np.int64), n * n)
-    ic = np.tile(np.repeat(np.arange(n, dtype=np.int64), n), 6)
-    jc = np.tile(np.arange(n, dtype=np.int64), 6 * n)
-
-    def cell_xyz(si, ti):
-        u = _uv_from_st_np(si)
-        v = _uv_from_st_np(ti)
-        return _face_uv_to_xyz_np(face, u, v)
-
-    cx, cy, cz = cell_xyz((ic + 0.5) / n, (jc + 0.5) / n)
-    phi, lam = math.radians(lat), math.radians(lon)
-    qx = math.cos(phi) * math.cos(lam)
-    qy = math.cos(phi) * math.sin(lam)
-    qz = math.sin(phi)
-    dcenter = np.arccos(np.clip(cx * qx + cy * qy + cz * qz, -1.0, 1.0))
-    circum = np.zeros_like(dcenter)
-    for ds, dt in ((0, 0), (0, 1), (1, 0), (1, 1)):
-        kx, ky, kz = cell_xyz((ic + ds) / n, (jc + dt) / n)
-        corner = np.arccos(np.clip(cx * kx + cy * ky + cz * kz, -1.0, 1.0))
-        circum = np.maximum(circum, corner)
-    keep = dcenter <= ang + circum
-    if not keep.any():
-        return []
-    shift = S2_MAX_LEVEL - level
-    i30 = (ic[keep].astype(np.uint64) << np.uint64(shift)) + np.uint64(
-        1 << (shift - 1)
-    )
-    j30 = (jc[keep].astype(np.uint64) << np.uint64(shift)) + np.uint64(
-        1 << (shift - 1)
-    )
-    leaves = from_face_ij_np(face[keep], i30, j30)
-    spans = []
-    for leaf in leaves.tolist():
-        cell = s2real_parent_py(int(leaf), level)
-        lo, hi = s2real_range_py(cell)
-
-        def sk(v: int) -> int:
-            w = v ^ (1 << 63)
-            return w - (1 << 64) if w >= (1 << 63) else w
-
-        spans.append((sk(lo), sk(hi)))
-    return list(merge_spans(spans))
-
-
 def s2real_region_cover(
     lon: float,
     lat: float,
@@ -670,15 +574,38 @@ def s2real_region_cover(
     <= cap angle) whole, and freezes to the conservative side when the
     ``max_cells`` budget or ``max_level`` is reached. Mixed-level
     output: big interior chunks cost one span while the cap rim
-    refines — tighter than any fixed-level cover at equal budget.
+    refines, so the budget goes where the cap boundary is.
     Per-cell geometry is exact (center + 4 true corners), not a
     remembered library metric constant. Driver-side query planning,
-    O(cells visited) python — the s2_cap_cover/kNN-planner
-    discipline."""
+    O(cells visited) python — the same discipline as the planar
+    cover planner. The spans are signed sortkeys (see
+    `s2real_sortkey_expr`) and a conservative SUPERSET of the cap, so
+    an exact haversine refine downstream keeps answers identical to a
+    cover-free oracle.
+
+    Raises ValueError for ``max_level`` outside ``0..30``,
+    ``max_cells < 1``, non-finite ``lon``/``lat``/``radius_km``,
+    a negative ``radius_km`` or ``|lat| > 90``."""
     import heapq
 
     from linear_quadtree_spark.functions.mercator import EARTH_RADIUS_KM
     from linear_quadtree_spark.intervals import merge_spans
+
+    if not 0 <= max_level <= S2_MAX_LEVEL:
+        raise ValueError(
+            f"max_level must be in 0..{S2_MAX_LEVEL}, got {max_level}"
+        )
+    if max_cells < 1:
+        raise ValueError(f"max_cells must be >= 1, got {max_cells}")
+    if not all(map(math.isfinite, (lon, lat, radius_km))):
+        raise ValueError(
+            f"lon, lat and radius_km must be finite, got "
+            f"({lon}, {lat}, {radius_km})"
+        )
+    if abs(lat) > 90.0:
+        raise ValueError(f"lat must be in [-90, 90], got {lat}")
+    if radius_km < 0:
+        raise ValueError(f"radius_km must be >= 0, got {radius_km}")
 
     ang = radius_km / EARTH_RADIUS_KM
     phi, lam = math.radians(lat), math.radians(lon)

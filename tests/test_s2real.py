@@ -9,9 +9,8 @@ that never touches the chunk tables) must agree exactly, and the
 structural properties below pin the parts a transcription error would
 break: table inversibility, within-face Hilbert adjacency, EXACT
 cross-face curve continuity (endpoint corners coincide on the cube —
-the kSwapMask per-face seeding property; the S2-STYLE module in
-functions/s2cell.py intentionally lacks this), face-cell id values,
-and nested parent ranges.
+the kSwapMask per-face seeding property), face-cell id values, and
+nested parent ranges.
 """
 
 import math
@@ -231,13 +230,13 @@ def test_token_of_negative_face_ids():
 
 
 def test_cap_cover_conservative_and_short():
-    """Every point within the cap must fall inside a covered span
-    (conservative superset), and the merged span list stays short
-    (the pruning property)."""
-    from linear_quadtree_spark.functions.s2real import s2real_cap_cover
+    """At the registry's (max_level=8, max_cells=48) every point within
+    the cap must fall inside a covered span (conservative superset),
+    and the merged span list stays short (the pruning property)."""
+    from linear_quadtree_spark.functions.s2real import s2real_region_cover
 
     site_lon, site_lat, km = 139.69, 35.69, 1200.0
-    spans = s2real_cap_cover(site_lon, site_lat, km, level=4)
+    spans = s2real_region_cover(site_lon, site_lat, km, max_level=8, max_cells=48)
     assert 0 < len(spans) <= 64  # short BETWEEN list, not a scan
 
     rng = np.random.default_rng(11)
@@ -273,7 +272,7 @@ def test_saved_layout_pushdown(spark, sf_dir, tmp_path):
     import pandas as pd
 
     from linear_quadtree_spark.functions.s2real import (
-        s2real_cap_cover,
+        s2real_region_cover,
         s2real_sortkey_expr,
         with_s2real,
     )
@@ -300,7 +299,7 @@ def test_saved_layout_pushdown(spark, sf_dir, tmp_path):
     # pick the cover span that actually holds fixture points (driver-
     # side over collected sk values — tiny SFs leave some spans empty)
     all_rows = leaf.select("doc_id", "sk").collect()
-    spans = s2real_cap_cover(139.69, 35.69, 1200.0, 4)
+    spans = s2real_region_cover(139.69, 35.69, 1200.0, max_level=8, max_cells=48)
     lo, hi = max(
         spans, key=lambda s: sum(s[0] <= r["sk"] <= s[1] for r in all_rows)
     )
@@ -319,12 +318,9 @@ def test_saved_layout_pushdown(spark, sf_dir, tmp_path):
 
 def test_region_cover_adaptive():
     """The S2RegionCoverer-shape planner: conservative at every
-    budget, never exceeds max_cells pre-merge, and more budget never
-    loosens the cover (volume is monotone non-increasing)."""
-    from linear_quadtree_spark.functions.s2real import (
-        s2real_cap_cover,
-        s2real_region_cover,
-    )
+    budget, and more budget never loosens the cover (volume is
+    monotone non-increasing)."""
+    from linear_quadtree_spark.functions.s2real import s2real_region_cover
 
     site_lon, site_lat, km = 139.69, 35.69, 1200.0
     rng = np.random.default_rng(3)
@@ -356,9 +352,45 @@ def test_region_cover_adaptive():
         if prev_vol is not None:
             assert v <= prev_vol  # budget buys tightness, never loses it
         prev_vol = v
-    # at generous budget the adaptive cover is strictly tighter than
-    # the fixed-level-4 cover
-    assert prev_vol < volume(s2real_cap_cover(site_lon, site_lat, km, 4))
+
+
+@pytest.mark.parametrize(
+    "arg, value",
+    [
+        ("max_level", 31),
+        ("max_level", 40),
+        ("max_level", -1),
+        ("max_cells", 0),
+        ("lon", float("nan")),
+        ("lat", float("inf")),
+        ("radius_km", float("nan")),
+        ("radius_km", float("inf")),
+        ("radius_km", -1.0),
+        ("lat", 90.5),
+        ("lat", -91.0),
+    ],
+)
+def test_region_cover_rejects_bad_arguments(arg, value):
+    """Out-of-range arguments raise a clear ValueError naming the
+    argument, before any planning starts."""
+    from linear_quadtree_spark.functions.s2real import s2real_region_cover
+
+    args = dict(lon=2.35, lat=48.85, radius_km=0.001, max_level=30, max_cells=1000)
+    args[arg] = value
+    with pytest.raises(ValueError, match=arg):
+        s2real_region_cover(**args)
+
+
+def test_leaf_np_face_boundaries_do_not_warn():
+    """Points on a face axis or edge zero some xyz component; the face
+    rows np.select does not pick must not leak divide warnings."""
+    import warnings
+
+    pts = [(0.0, 0.0), (90.0, 0.0), (180.0, 0.0), (0.0, 90.0), (0.0, -90.0), (45.0, 0.0)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        ids = [s2real_leaf_np([lon], [lat])[0] for lon, lat in pts]
+    assert [int(i) for i in ids] == [s2real_leaf_slow_py(lon, lat) for lon, lat in pts]
 
 
 def test_edge_neighbors_including_cross_face():
